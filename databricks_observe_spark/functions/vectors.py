@@ -1,15 +1,12 @@
 """Vector column expressions — dot product / cosine, codegen-friendly.
 
-Two formulations, both with a FIXED left-to-right float summation order so
-results are bit-identical across engines and partitionings:
-
-- ``dot_expr`` — ``F.aggregate`` sequential fold. Correct but interpreted
-  per element (higher-order lambdas bypass whole-stage codegen): fine for
-  one-shot per-row work, ~100x too slow inside an O(n^2) pair loop.
-- ``dot_unrolled`` — explicit ``v[1]*u[1] + ... + v[d]*u[d]`` expression:
-  stays inside whole-stage codegen, same left-fold addition order. This is
-  the hot-path form; the DuckDB oracle uses the same unrolled SQL
-  (:func:`dot_sql_unrolled`) so the arithmetic matches term for term.
+``dot_unrolled`` is an explicit ``v[1]*u[1] + ... + v[d]*u[d]`` expression
+with a FIXED left-to-right float summation order, so results are
+bit-identical across engines and partitionings. It stays inside
+whole-stage codegen (a ``F.aggregate`` fold is interpreted per element,
+~100x too slow inside an O(n^2) pair loop); the DuckDB oracle uses the
+same unrolled SQL (:func:`dot_sql_unrolled`) so the arithmetic matches
+term for term.
 """
 
 from __future__ import annotations
@@ -17,20 +14,6 @@ from __future__ import annotations
 import random
 
 from pyspark.sql import Column, functions as F
-
-
-def dot_expr(a: str | Column, b: str | Column) -> Column:
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def cosine_expr(a: str | Column, b: str | Column) -> Column:
-    return dot_expr(a, b) / (
-        F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b))
-    )
 
 
 def dot_unrolled(a: str | Column, b: str | Column, dim: int) -> Column:

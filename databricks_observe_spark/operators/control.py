@@ -28,11 +28,6 @@ PIPELINE_TERMINAL = {"COMPLETED", "FAILED", "CANCELED"}  # pipeline_discovery.py
 # ``wait_for_job`` defaults to PIPELINE_TERMINAL below; a deployment
 # ingesting raw job states would pass ``terminal=JOB_TERMINAL``.
 JOB_TERMINAL = {"TERMINATED", "SKIPPED", "INTERNAL_ERROR"}  # job_discovery.py:44
-# reference cadence constant (pipeline_discovery.py:61 / job_discovery.py:55);
-# the batch replay below consumes recorded update rows directly, so no 5 s
-# sleep exists here — the constant documents the live-polling cadence an
-# online deployment would configure on its trigger interval
-POLL_INTERVAL_S = 5
 DEFAULT_TIMEOUT_S = 600  # pipeline_discovery.py:44 / job_discovery.py:22
 
 

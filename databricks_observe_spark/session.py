@@ -37,13 +37,13 @@ def get_spark(app_name: str = "databricks-observe-spark") -> SparkSession:
 def ensure_conf(spark: SparkSession) -> SparkSession:
     """Set the runtime-settable engine defaults on an externally-created
     session (the verification driver owns its own SparkSession)."""
-    # AQE coalesces batch shuffles regardless, but STATEFUL STREAMING
-    # pins its state-store partition count to this at first checkpoint
-    # and AQE never touches it — the vanilla default of 200 means 200
-    # state commits per micro-batch on a 32-core box. Lift ONLY the
-    # vanilla default: an explicit caller pin (e.g. the streaming
-    # harness's _stream_confs, which applies before the stream maker
-    # re-runs ensure_conf) must win, not be stomped back to 32.
+    # Lift ONLY the vanilla default of 200 (AQE coalesces batch shuffles
+    # from there); an explicit caller pin must win, not be stomped back
+    # to 32. Streams never start on this width: every stream maker in
+    # streaming/state.py calls this while it builds its plan, then starts
+    # through streaming.state.start_stream, which pins the state-store
+    # count (fixed in the checkpoint, never touched by AQE) around
+    # ``.start()``.
     try:
         if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
             spark.conf.set("spark.sql.shuffle.partitions", "32")

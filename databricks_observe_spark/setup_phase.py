@@ -228,20 +228,16 @@ def build_setup_indexes(spark, ctx, sf_dir: str) -> None:
 
     from pyspark.sql import functions as F
 
-    from databricks_observe_spark.streaming.state import (
-        _stream_confs,
-        stream_events,
-    )
+    from databricks_observe_spark.streaming.state import start_stream, stream_events
 
     name = f"warm_{uuid.uuid4().hex[:6]}"
-    with _stream_confs(spark):
-        q = (
-            stream_events(spark, sf_dir)
-            .where(F.lit(False))
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-            .trigger(availableNow=True)
-            .start()
-        )
+    q = start_stream(
+        spark,
+        stream_events(spark, sf_dir)
+        .where(F.lit(False))
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
+        .trigger(availableNow=True),
+    )
     q.awaitTermination(60)

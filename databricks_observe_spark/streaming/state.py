@@ -20,11 +20,10 @@ survives a 100 TB event stream.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from databricks_observe_spark.functions.rounding import (
     round_half_up,
@@ -92,12 +91,63 @@ def stream_updates(events: DataFrame) -> DataFrame:
     )
 
 
+# Every stateful stream starts on this many shuffle partitions, each of
+# which owns a state store (a checkpoint dir, a delta file per micro-batch
+# and a maintenance task); Spark records the count in the offset log at
+# the stream's first batch and restores it on every restart. Measured on a
+# 4-core host (perfbench observe_tick, seed 1, traced), the completion
+# sensor at the session's batch width of 32 stores against 4: best warm
+# tick 5.19 s -> 1.34 s, cold tick 7.02 s -> 3.02 s, state commits summed
+# over tasks 4.98 s -> 0.70 s, sink files 142 -> 34; state stayed at 43
+# rows in 2 micro-batches per tick either way.
+# Production sizes this UP with key cardinality — state parallelism, not
+# a fixed constant.
+STREAM_SHUFFLE_PARTITIONS = "4"
+
+# The Pandas sessionizers are PYTHON-bound, unlike the JVM-state streams
+# (fewer stores = faster): their partitions set Arrow worker parallelism.
+# Measured sweep at sf0.1: 4 -> 2.3 s, 8 -> 1.8 s, 16 -> 1.4 s, 32 -> 1.6 s.
+SESSIONIZE_SHUFFLE_PARTITIONS = "16"
+
+# Run-to-exhaustion harnesses cut the trailing no-data micro-batch when it
+# can emit nothing; a continuous deployment keeps it (eviction cadence
+# matters when the stream doesn't end). Append-mode aggregations
+# (tumbling) must keep theirs — their output flushes on watermark.
+NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+
+
+def start_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    confs: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Start ``writer`` on ``STREAM_SHUFFLE_PARTITIONS`` state partitions.
+
+    A stream captures the session conf at ``.start()``, so the pin is set
+    only around it and batch queries keep the session defaults. ``confs``
+    adds per-stream overrides keyed by the full conf name."""
+    pinned = {"spark.sql.shuffle.partitions": STREAM_SHUFFLE_PARTITIONS}
+    pinned.update(confs or {})
+    prev = {k: spark.conf.get(k, None) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def first_completed_stream(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
     out_table: str,
     glob: str = "events.parquet",
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """ST2 as a stream: emit each (entity, update) at most once on
     COMPLETED, exactly the sensor-cursor dedup (dlt_sensor.py:23-41).
@@ -124,13 +174,14 @@ def first_completed_stream(
         .dropDuplicatesWithinWatermark(["entity_type", "entity_id", "update_id"])
         .select("entity_type", "entity_id", "update_id", "ts")
     )
-    return (
+    return start_stream(
+        spark,
         completed.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        confs,
     )
 
 
@@ -146,55 +197,14 @@ def tumbling_counts_stream(
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    return (
+    return start_stream(
+        spark,
         counts.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-
-
-# Measured sweep (sf0.1, local[32]): 8 -> 4 stores cuts every harness
-# query's wall 15-45% (each store is a checkpoint dir + delta-file write
-# + maintenance thread; at fixture scale the state fits 4 with room);
-# 2 is no faster than 4, so 4 keeps headroom. Production sizes this UP
-# with key cardinality — state parallelism, not a fixed constant.
-STREAM_SHUFFLE_PARTITIONS = "4"
-
-
-@contextlib.contextmanager
-def _stream_confs(spark: SparkSession, extra: dict[str, str] | None = None):
-    """Pin stateful-stream confs around ``.start()`` (a stream captures
-    the conf at start, so this scopes to the stream while leaving batch
-    queries on the session defaults).
-
-    Always pins shuffle partitions to a fixture-sized count: each shuffle
-    partition of a stateful operator owns a state store (checkpoint dir +
-    maintenance thread); at fixture scale 32 stores are pure overhead
-    (~2x wall on the harness queries, measured). At production scale this
-    knob is sized UP with key cardinality — state parallelism, not a
-    fixed constant. ``extra`` adds per-stream conf overrides keyed by the
-    full conf name."""
-    confs = {"spark.sql.shuffle.partitions": STREAM_SHUFFLE_PARTITIONS}
-    confs.update(extra or {})
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def _stream_partitions(spark: SparkSession):
-    """Back-compat alias: partitions-only pinning."""
-    return _stream_confs(spark)
 
 
 def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,13 +223,8 @@ def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFra
     ckpt = tempfile.mkdtemp(prefix="ckpt_fcq_")
     # dropDuplicatesWithinWatermark emits a key the batch it first
     # arrives; the trailing no-data micro-batch only evicts expired state
-    # (0 output rows) — cut it for the run-to-exhaustion harness, as in
-    # streaming_click_attribution. Watermark-flushed APPEND AGGREGATIONS
-    # (tumbling) must keep theirs.
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = first_completed_stream(spark, sf_dir, ckpt, name)
+    # (0 output rows)
+    q = first_completed_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -256,8 +261,7 @@ def streaming_tumbling_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"tw_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_twq_")
-    with _stream_partitions(spark):
-        q = tumbling_counts_stream(spark, sf_dir, ckpt, name)
+    q = tumbling_counts_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -287,7 +291,11 @@ ATTRIB_WINDOW = "2 hours"  # click lookback per purchase
 
 
 def click_attribution_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
+    spark: SparkSession,
+    sf_dir: str,
+    checkpoint_dir: str,
+    out_table: str,
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks in the preceding 2 hours — last-touch attribution as a
@@ -331,13 +339,14 @@ def click_attribution_stream(
         F.col("p_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    return (
+    return start_stream(
+        spark,
         joined.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        confs,
     )
 
 
@@ -354,14 +363,8 @@ def streaming_click_attribution_query(
     # An INNER stream-stream join emits every match in the batch that
     # completes it and emits NOTHING on watermark advance — the trailing
     # no-data micro-batch exists only to evict expired state (measured:
-    # ~1/3 of the run's wall, 0 output rows). Cut that dead batch here;
-    # a continuous deployment keeps it (eviction cadence matters when the
-    # stream doesn't end). Append-mode aggregations (tumbling/sessionize)
-    # MUST keep no-data batches — their output flushes on watermark.
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = click_attribution_stream(spark, sf_dir, ckpt, name)
+    # ~1/3 of the run's wall, 0 output rows).
+    q = click_attribution_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -385,7 +388,11 @@ SESSION_GAP_S = 2 * 3600  # matches operators/events.py:user_sessions
 
 
 def sessionize_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
+    spark: SparkSession,
+    sf_dir: str,
+    checkpoint_dir: str,
+    out_table: str,
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Custom stateful operator: per-user sessionization via
     ``applyInPandasWithState`` — the arbitrary-state API the reference's
@@ -460,13 +467,14 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
+    return start_stream(
+        spark,
         sessions.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS} | (confs or {}),
     )
 
 
@@ -503,11 +511,11 @@ def transition_log_stream(
             .parquet(out_path)
         )
 
-    return (
+    return start_stream(
+        spark,
         completed.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
 
 
@@ -531,18 +539,7 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key that received no input rows, so a no-data micro-batch cannot
     # emit anything — the open-tail sessions stay in state either way
     # (asserted in tests). Cut the dead batch.
-    with _stream_confs(
-        spark,
-        {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-            # unlike the JVM-state harnesses (fewer stores = faster), the
-            # Pandas fold is PYTHON-bound: partitions here set Arrow
-            # worker parallelism. Measured sweep at sf0.1: 4 -> 2.3 s,
-            # 8 -> 1.8 s, 16 -> 1.4 s, 32 -> 1.6 s.
-            "spark.sql.shuffle.partitions": "16",
-        },
-    ):
-        q = sessionize_stream(spark, sf_dir, ckpt, name)
+    q = sessionize_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -589,7 +586,11 @@ QUALIFY session_id < MAX(session_id) OVER (PARTITION BY user_id)
 
 
 def corpus_dedup_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
+    spark: SparkSession,
+    sf_dir: str,
+    checkpoint_dir: str,
+    out_table: str,
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Streaming exact dedup of a document feed: each distinct text digest
     is accepted exactly once — the continuous form of
@@ -617,13 +618,14 @@ def corpus_dedup_stream(
         docs.select(F.md5("text").alias("text_hash"))
         .dropDuplicates(["text_hash"])
     )
-    return (
+    return start_stream(
+        spark,
         accepted.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        confs,
     )
 
 
@@ -640,10 +642,7 @@ def streaming_corpus_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unwatermarked dropDuplicates emits on first arrival and never on
     # watermark advance — the trailing no-data batch would be pure
     # overhead, as in streaming_first_completed
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = corpus_dedup_stream(spark, sf_dir, ckpt, name)
+    q = corpus_dedup_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -659,7 +658,11 @@ SELECT DISTINCT md5(text) AS text_hash FROM documents
 
 
 def drift_counts_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
+    spark: SparkSession,
+    sf_dir: str,
+    checkpoint_dir: str,
+    out_table: str,
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Complete-mode ``(event_type, bin)`` ref/cur histogram over the
     event stream — the continuously-maintained state a streaming drift
@@ -698,13 +701,14 @@ def drift_counts_stream(
             F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
         )
     )
-    return (
+    return start_stream(
+        spark,
         counts.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        confs,
     )
 
 
@@ -725,10 +729,7 @@ def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="ckpt_dpq_")
     # complete-mode aggregation re-emits full state every trigger; the
     # trailing no-data batch would just rewrite the same table
-    with _stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = drift_counts_stream(spark, sf_dir, ckpt, name)
+    q = drift_counts_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -827,7 +828,11 @@ class _SessionizeProcessor(_StatefulProcessor):
 
 
 def sessionize_tws_stream(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
+    spark: SparkSession,
+    sf_dir: str,
+    checkpoint_dir: str,
+    out_table: str,
+    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Per-user sessionization via ``transformWithStateInPandas`` (the
     Spark 4 arbitrary-state API): named ValueState, ProcessingTime
@@ -843,13 +848,14 @@ def sessionize_tws_stream(
         outputMode="Append",
         timeMode="None",
     )
-    return (
+    return start_stream(
+        spark,
         sessions.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS} | (confs or {}),
     )
 
 
@@ -868,15 +874,7 @@ def streaming_sessionize_tws_query(spark: SparkSession, sf_dir: str) -> DataFram
         )
     name = f"tws_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_twsq_")
-    with _stream_confs(
-        spark,
-        {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-            # python-bound like the GroupState twin: see sessionize above
-            "spark.sql.shuffle.partitions": "16",
-        },
-    ):
-        q = sessionize_tws_stream(spark, sf_dir, ckpt, name)
+    q = sessionize_tws_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(

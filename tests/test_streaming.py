@@ -294,13 +294,10 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
     ckpt = tempfile.mkdtemp(prefix="ckpt_dp_replay_")
     n1 = f"dp_r1_{uuid.uuid4().hex[:6]}"
     n2 = f"dp_r2_{uuid.uuid4().hex[:6]}"
-    with ST._stream_confs(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    ):
-        q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n1)
-        q.awaitTermination(120)
-        q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n2)
-        q.awaitTermination(120)
+    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n1, confs=ST.NO_DATA_BATCHES_OFF)
+    q.awaitTermination(120)
+    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n2, confs=ST.NO_DATA_BATCHES_OFF)
+    q.awaitTermination(120)
     first = {tuple(r) for r in spark.table(n1).collect()}
     second = {tuple(r) for r in spark.table(n2).collect()}
     # a restart with no new data re-emits the recovered state (complete
@@ -314,3 +311,111 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
         sum(r[2] + r[3] for r in first)
         == tables["events"].filter(F.col("value").isNotNull()).count()
     )
+
+
+# State-store count every stateful stream maker must start on: a maker
+# that starts outside streaming.state.start_stream runs on the session's
+# batch width and fails here instead of only running slow.
+_MAKER_STATE_PARTITIONS = {
+    "first_completed_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "tumbling_counts_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "click_attribution_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "sessionize_stream": ST.SESSIONIZE_SHUFFLE_PARTITIONS,
+    "transition_log_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "corpus_dedup_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "drift_counts_stream": ST.STREAM_SHUFFLE_PARTITIONS,
+    "sessionize_tws_stream": ST.SESSIONIZE_SHUFFLE_PARTITIONS,
+}
+
+
+def _state_widths(q) -> set[int]:
+    return {s.numShufflePartitions for p in q.recentProgress for s in p.stateOperators}
+
+
+def test_every_stream_maker_pins_state_partitions(spark, tmp_path):
+    import inspect
+
+    import pandas as pd
+
+    makers = {
+        name
+        for name, fn in inspect.getmembers(ST, inspect.isfunction)
+        if fn.__module__ == ST.__name__
+        and "checkpoint_dir" in inspect.signature(fn).parameters
+    }
+    assert makers == set(_MAKER_STATE_PARTITIONS)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame(
+        {
+            "event_id": [0, 1, 2, 3],
+            "ts": pd.to_datetime(
+                [f"2024-01-01 {hm}" for hm in ("00:00", "00:30", "01:00", "05:00")]
+            ).astype("int64"),
+            "user_id": [2, 2, 2, 3],
+            "event_type": ["click", "purchase", "signup", "purchase"],
+            "value": [1.0, 2.0, 3.0, 4.0],
+            "props": ["{}"] * 4,
+        }
+    ).to_parquet(src / "events.parquet")
+    pd.DataFrame({"doc_id": [0, 1, 2], "text": ["a", "b", "a"]}).to_parquet(
+        src / "documents.parquet"
+    )
+
+    batch_width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert batch_width not in set(_MAKER_STATE_PARTITIONS.values())
+    for name, width in _MAKER_STATE_PARTITIONS.items():
+        if name == "sessionize_tws_stream" and not ST._protobuf_available():
+            continue  # needs google.protobuf; see test_sessionize_tws_*
+        out = str(tmp_path / "log") if name == "transition_log_stream" else f"pin_{name}"
+        q = getattr(ST, name)(spark, str(src), str(tmp_path / f"ck_{name}"), out)
+        assert q.awaitTermination(120), name
+        assert _state_widths(q) == {int(width)}, name
+        # the pin is scoped to the start: batch queries keep their width
+        assert spark.conf.get("spark.sql.shuffle.partitions") == batch_width
+
+
+def test_transition_log_restarts_on_its_recorded_state_width(spark, tmp_path, monkeypatch):
+    """A sensor checkpoint written at the session's batch width of 32
+    state partitions restarts under the pinned start with its 32 stores
+    (Spark restores the count from the offset log, not the conf), and
+    after one more file lands the log still holds exactly the batch
+    COMPLETED key set."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet").sort_by("ts")
+    half = events.num_rows // 2
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(events.slice(0, half), src / "a.parquet")
+    ckpt, out = str(tmp_path / "ck"), str(tmp_path / "log")
+
+    with monkeypatch.context() as m:
+        m.setattr(ST, "STREAM_SHUFFLE_PARTITIONS", "32")
+        q1 = ST.transition_log_stream(spark, str(src), ckpt, out, glob="*.parquet")
+        assert q1.awaitTermination(120)
+    assert _state_widths(q1) == {32}
+    n1 = spark.read.parquet(out).count()
+
+    # later-ordered half: nothing in it is older than the watermark
+    pq.write_table(events.slice(half), src / "b.parquet")
+    q2 = ST.transition_log_stream(spark, str(src), ckpt, out, glob="*.parquet")
+    assert q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert _state_widths(q2) == {32}
+    assert sum(p.numInputRows for p in q2.recentProgress) == events.num_rows - half
+
+    keys = ["entity_type", "entity_id", "update_id"]
+    log = spark.read.parquet(out)
+    assert log.count() > n1
+    got = {tuple(r) for r in log.select(*keys).distinct().collect()}
+    want = {
+        tuple(r)
+        for r in ST.stream_updates(spark.read.parquet(str(src)))
+        .filter(F.col("state") == ST.TERMINAL_STATE)
+        .select(*keys)
+        .distinct()
+        .collect()
+    }
+    assert got == want and got
