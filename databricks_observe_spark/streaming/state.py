@@ -109,10 +109,11 @@ STREAM_SHUFFLE_PARTITIONS = "4"
 # Measured sweep at sf0.1: 4 -> 2.3 s, 8 -> 1.8 s, 16 -> 1.4 s, 32 -> 1.6 s.
 SESSIONIZE_SHUFFLE_PARTITIONS = "16"
 
-# Run-to-exhaustion harnesses cut the trailing no-data micro-batch when it
-# can emit nothing; a continuous deployment keeps it (eviction cadence
-# matters when the stream doesn't end). Append-mode aggregations
-# (tumbling) must keep theirs — their output flushes on watermark.
+# Makers whose operator emits nothing on a watermark advance cut the
+# trailing no-data micro-batch. The completion sensor keeps it: restarted
+# every tick, it relies on that batch to evict expired keys between ticks.
+# Append-mode aggregations (tumbling) must keep theirs — their output
+# flushes on watermark.
 NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
@@ -147,7 +148,6 @@ def first_completed_stream(
     checkpoint_dir: str,
     out_table: str,
     glob: str = "events.parquet",
-    confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """ST2 as a stream: emit each (entity, update) at most once on
     COMPLETED, exactly the sensor-cursor dedup (dlt_sensor.py:23-41).
@@ -174,6 +174,9 @@ def first_completed_stream(
         .dropDuplicatesWithinWatermark(["entity_type", "entity_id", "update_id"])
         .select("entity_type", "entity_id", "update_id", "ts")
     )
+    # dropDuplicatesWithinWatermark emits a key the batch it first
+    # arrives; the trailing no-data micro-batch only evicts expired state
+    # (0 output rows)
     return start_stream(
         spark,
         completed.writeStream.format("memory")
@@ -181,7 +184,7 @@ def first_completed_stream(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        confs,
+        NO_DATA_BATCHES_OFF,
     )
 
 
@@ -221,10 +224,7 @@ def streaming_first_completed_query(spark: SparkSession, sf_dir: str) -> DataFra
 
     name = f"fc_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_fcq_")
-    # dropDuplicatesWithinWatermark emits a key the batch it first
-    # arrives; the trailing no-data micro-batch only evicts expired state
-    # (0 output rows)
-    q = first_completed_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = first_completed_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -291,11 +291,7 @@ ATTRIB_WINDOW = "2 hours"  # click lookback per purchase
 
 
 def click_attribution_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
 ) -> StreamingQuery:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks in the preceding 2 hours — last-touch attribution as a
@@ -339,6 +335,9 @@ def click_attribution_stream(
         F.col("p_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
+    # an inner stream-stream join emits nothing on watermark advance: the
+    # trailing no-data micro-batch only evicts expired state (measured:
+    # ~1/3 of the run's wall, 0 output rows)
     return start_stream(
         spark,
         joined.writeStream.format("memory")
@@ -346,7 +345,7 @@ def click_attribution_stream(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        confs,
+        NO_DATA_BATCHES_OFF,
     )
 
 
@@ -360,11 +359,7 @@ def streaming_click_attribution_query(
 
     name = f"ca_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_caq_")
-    # An INNER stream-stream join emits every match in the batch that
-    # completes it and emits NOTHING on watermark advance — the trailing
-    # no-data micro-batch exists only to evict expired state (measured:
-    # ~1/3 of the run's wall, 0 output rows).
-    q = click_attribution_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = click_attribution_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -388,11 +383,7 @@ SESSION_GAP_S = 2 * 3600  # matches operators/events.py:user_sessions
 
 
 def sessionize_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
 ) -> StreamingQuery:
     """Custom stateful operator: per-user sessionization via
     ``applyInPandasWithState`` — the arbitrary-state API the reference's
@@ -467,6 +458,9 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    # with NoTimeout the fold is never invoked for a key that received no
+    # input rows, so a no-data micro-batch cannot emit anything — the
+    # open-tail sessions stay in state either way (asserted in tests)
     return start_stream(
         spark,
         sessions.writeStream.format("memory")
@@ -474,7 +468,8 @@ def sessionize_stream(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS} | (confs or {}),
+        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS}
+        | NO_DATA_BATCHES_OFF,
     )
 
 
@@ -535,11 +530,7 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"sess_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_sessq_")
-    # With GroupStateTimeout.NoTimeout the fold is never invoked for a
-    # key that received no input rows, so a no-data micro-batch cannot
-    # emit anything — the open-tail sessions stay in state either way
-    # (asserted in tests). Cut the dead batch.
-    q = sessionize_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = sessionize_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -586,11 +577,7 @@ QUALIFY session_id < MAX(session_id) OVER (PARTITION BY user_id)
 
 
 def corpus_dedup_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
 ) -> StreamingQuery:
     """Streaming exact dedup of a document feed: each distinct text digest
     is accepted exactly once — the continuous form of
@@ -618,6 +605,8 @@ def corpus_dedup_stream(
         docs.select(F.md5("text").alias("text_hash"))
         .dropDuplicates(["text_hash"])
     )
+    # unwatermarked dropDuplicates emits on first arrival and never on
+    # watermark advance — a no-data batch would be pure overhead
     return start_stream(
         spark,
         accepted.writeStream.format("memory")
@@ -625,7 +614,7 @@ def corpus_dedup_stream(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        confs,
+        NO_DATA_BATCHES_OFF,
     )
 
 
@@ -639,10 +628,7 @@ def streaming_corpus_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"cd_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_cdq_")
-    # unwatermarked dropDuplicates emits on first arrival and never on
-    # watermark advance — the trailing no-data batch would be pure
-    # overhead, as in streaming_first_completed
-    q = corpus_dedup_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = corpus_dedup_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -658,11 +644,7 @@ SELECT DISTINCT md5(text) AS text_hash FROM documents
 
 
 def drift_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
 ) -> StreamingQuery:
     """Complete-mode ``(event_type, bin)`` ref/cur histogram over the
     event stream — the continuously-maintained state a streaming drift
@@ -701,6 +683,8 @@ def drift_counts_stream(
             F.sum(F.lit(1) - F.col("is_ref")).alias("cur_n"),
         )
     )
+    # complete mode re-emits full state every trigger; a no-data batch
+    # would just rewrite the same table
     return start_stream(
         spark,
         counts.writeStream.format("memory")
@@ -708,7 +692,7 @@ def drift_counts_stream(
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        confs,
+        NO_DATA_BATCHES_OFF,
     )
 
 
@@ -727,9 +711,7 @@ def streaming_drift_psi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"dp_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_dpq_")
-    # complete-mode aggregation re-emits full state every trigger; the
-    # trailing no-data batch would just rewrite the same table
-    q = drift_counts_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = drift_counts_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
@@ -828,11 +810,7 @@ class _SessionizeProcessor(_StatefulProcessor):
 
 
 def sessionize_tws_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, out_table: str
 ) -> StreamingQuery:
     """Per-user sessionization via ``transformWithStateInPandas`` (the
     Spark 4 arbitrary-state API): named ValueState, ProcessingTime
@@ -848,6 +826,7 @@ def sessionize_tws_stream(
         outputMode="Append",
         timeMode="None",
     )
+    # same partitions and no-data reasoning as sessionize_stream
     return start_stream(
         spark,
         sessions.writeStream.format("memory")
@@ -855,7 +834,8 @@ def sessionize_tws_stream(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True),
-        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS} | (confs or {}),
+        {"spark.sql.shuffle.partitions": SESSIONIZE_SHUFFLE_PARTITIONS}
+        | NO_DATA_BATCHES_OFF,
     )
 
 
@@ -874,7 +854,7 @@ def streaming_sessionize_tws_query(spark: SparkSession, sf_dir: str) -> DataFram
         )
     name = f"tws_q_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_twsq_")
-    q = sessionize_tws_stream(spark, sf_dir, ckpt, name, confs=NO_DATA_BATCHES_OFF)
+    q = sessionize_tws_stream(spark, sf_dir, ckpt, name)
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(

@@ -294,9 +294,9 @@ def test_streaming_drift_psi_matches_batch_and_recovers_state(spark, tables):
     ckpt = tempfile.mkdtemp(prefix="ckpt_dp_replay_")
     n1 = f"dp_r1_{uuid.uuid4().hex[:6]}"
     n2 = f"dp_r2_{uuid.uuid4().hex[:6]}"
-    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n1, confs=ST.NO_DATA_BATCHES_OFF)
+    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n1)
     q.awaitTermination(120)
-    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n2, confs=ST.NO_DATA_BATCHES_OFF)
+    q = ST.drift_counts_stream(spark, SF_DIR, ckpt, n2)
     q.awaitTermination(120)
     first = {tuple(r) for r in spark.table(n1).collect()}
     second = {tuple(r) for r in spark.table(n2).collect()}
